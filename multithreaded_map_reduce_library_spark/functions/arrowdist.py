@@ -80,13 +80,23 @@ def _rider_from_first_row(batch, name: str):
             f"first-row rider {name!r} missing: partition did not start at "
             "in-partition offset 0 (projection moved across a shuffle?)"
         )
-    return cell.as_py()
+    rider = cell.as_py()
+    if not rider:
+        raise ValueError(f"empty rider {name!r}: the bounded side has no rows")
+    return rider
 
 
 def _list_col_to_ndarray(batch, name: str, dtype):
     import numpy as np
 
     col = batch.column(batch.schema.get_field_index(name))
+    lens = np.diff(np.asarray(col.offsets))
+    if col.null_count or (lens != lens[:1]).any():
+        raise ValueError(
+            f"list column {name!r} is ragged or has NULL rows (lengths "
+            f"{lens.min()}..{lens.max()}, {col.null_count} NULL): every row "
+            "must hold a vector of the same dimension"
+        )
     flat = np.asarray(col.flatten(), dtype=dtype)
     return flat.reshape(batch.num_rows, -1)
 

@@ -15,12 +15,107 @@ config here is chosen for the 1000-executor / 100 TB deployment:
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "multithreaded-map-reduce-library-spark"
+
+
+def _archive_stamp(path: str) -> tuple[int, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size, st.st_ino
+
+
+def _archive_of(path: str) -> str:
+    """The file ``zipimporter(path)`` opens: the longest existing prefix
+    of ``path`` (the rest is a package sub-path inside the zip)."""
+    while True:
+        try:
+            os.stat(path)
+            return path
+        except (OSError, ValueError):
+            head = os.path.dirname(path)
+            if head == path:
+                return path
+            path = head
+
+
+# archive -> stamp taken just before the read whose directory now sits in
+# zipimport's shared directory cache, where new finders of the same
+# archive (package sub-paths) take it from without reading.
+_READ_STAMPS: dict[str, tuple[int, int, int] | None] = {}
+
+
+class StatCheckedZipImporter(zipimport.zipimporter):
+    """``zipimporter`` that re-reads its archive directory on
+    ``invalidate_caches`` only when the archive file changed.
+
+    Spark's Python worker calls ``importlib.invalidate_caches()`` before
+    every task (``pyspark.worker_util.setup_spark_files``). On CPython
+    3.11 the stock ``zipimporter`` answers by re-parsing the whole zip
+    directory in pure Python, once per ``sys.path_importer_cache`` entry:
+    pyspark.zip, the py4j zip, the spark-core jar, this package's zip and
+    the package sub-paths inside them cost ~0.28 CPU-s per task before
+    any user code runs (4 cores, Spark 4.1.2). A rewritten archive (new
+    mtime, size or inode) is still re-read, so invalidation stays correct.
+
+    Every stamp is taken before the read it vouches for: a write racing
+    the read leaves the older stamp, so the next invalidation reads again.
+    """
+
+    def __init__(self, path):
+        archive = _archive_of(path)
+        stamp = _archive_stamp(archive)
+        super().__init__(path)
+        if self.archive != archive:
+            stamp = None  # resolved differently: let the next invalidation read
+        self._stamp = _READ_STAMPS.setdefault(self.archive, stamp)
+
+    def invalidate_caches(self):
+        stamp = _archive_stamp(self.archive)
+        if stamp != self._stamp:
+            super().invalidate_caches()
+            self._stamp = _READ_STAMPS[self.archive] = stamp
+
+
+def _install_zip_importer() -> None:
+    """Make :class:`StatCheckedZipImporter` the zip path hook of this
+    process and convert the stock ``zipimporter`` finders already cached.
+
+    The cached finders change class in place rather than being replaced:
+    they are also the ``__loader__`` of every module imported from their
+    zip, and those must keep seeing the archive's current directory.
+    Runs when the package is imported, so a worker gets it the first time
+    it unpickles an engine function.
+
+    A converted finder read its directory before this ran, at a time
+    nobody recorded, so it trusts that directory as of its archive's
+    stamp now; a rewrite that landed between that read and this call is
+    missed until the archive changes again. Spark never rewrites these
+    archives in place: pyspark.zip, py4j and the jars are installation
+    files, and files added with ``addPyFile`` land under their own name
+    in a per-application directory (this package's zip gets a fresh
+    temp name per shipping process)."""
+    sys.path_hooks[:] = [
+        StatCheckedZipImporter if hook is zipimport.zipimporter else hook
+        for hook in sys.path_hooks
+    ]
+    for finder in list(sys.path_importer_cache.values()):
+        if type(finder) is zipimport.zipimporter:
+            finder.__class__ = StatCheckedZipImporter
+            finder._stamp = _READ_STAMPS.setdefault(
+                finder.archive, _archive_stamp(finder.archive)
+            )
+
+
+_install_zip_importer()
 
 _PKG_ZIP: str | None = None
 _SHIPPED_APP_IDS: set[str] = set()

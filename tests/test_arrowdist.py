@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from multithreaded_map_reduce_library_spark.functions.arrowdist import (
@@ -167,3 +168,34 @@ def test_rider_reaches_every_partition_and_batch_boundaries():
 
     with pytest.raises(ValueError, match="first-row rider"):
         list(lloyd_argmin_batches(iter([batch([1, 2], False)])))
+
+
+def test_empty_rider_raises_diagnostic():
+    from multithreaded_map_reduce_library_spark.functions.arrowdist import (
+        _rider_from_first_row,
+    )
+
+    b = pa.RecordBatch.from_pydict(
+        {"_q": pa.array([[], None], pa.list_(pa.struct([("q_id", pa.int64())])))}
+    )
+    with pytest.raises(ValueError, match="empty rider '_q'"):
+        _rider_from_first_row(b, "_q")
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [[[1, 2, 3], [4], [5, 6]], [[1, 2, 3], None, [4, 5, 6]]],
+    ids=["ragged", "null"],
+)
+def test_ragged_vector_column_raises_not_misaligns(rows):
+    """6 values over 3 rows would reshape to (3, 2) and silently pair
+    values with the wrong rows."""
+    from multithreaded_map_reduce_library_spark.functions.arrowdist import (
+        _list_col_to_ndarray,
+    )
+
+    b = pa.RecordBatch.from_pydict({"v": pa.array(rows, pa.list_(pa.int64()))})
+    with pytest.raises(ValueError, match="list column 'v'"):
+        _list_col_to_ndarray(b, "v", np.int64)
+    ok = pa.RecordBatch.from_pydict({"v": pa.array([[1, 2], [3, 4], [5, 6]])})
+    assert _list_col_to_ndarray(ok.slice(1), "v", np.int64).tolist() == [[3, 4], [5, 6]]
